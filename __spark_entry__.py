@@ -1066,37 +1066,31 @@ def _q_pipeline_llm_prep(spark, sf_dir):
     scan; the oracle is the same chain composed from each operator's own
     SQL twin (the oracle builders take table= subqueries by design).
 
-    The input goes through dedup's _spread guard AND a persist first: the
-    repetition gate is heavy per-row codegen (six sorted-run n-gram
-    folds), the sf0.1 table is ONE parquet file, and — the subtle part —
-    a bare repartition does NOT help because PushDownPredicate moves the
-    deterministic ``kept`` filter (and with it the whole metric
-    computation) below the exchange, back into the single-split scan
-    (measured: 26.7 s with no spread, 28.9 s with spread alone).  The
-    cache boundary blocks the pushdown, so the gate predicates evaluate
-    across the 32 cached partitions (~4 s total).  At real scale the
-    input arrives in thousands of splits and both guards no-op."""
-    from melody_join_spark.cache import release_on_gc
+    The input goes through dedup's _spread guard AND a checkpoint first:
+    the repetition gate is heavy per-row codegen (six sorted-run n-gram
+    folds) and the sf0.1 table is ONE parquet file.  A bare repartition
+    does not help, because PushDownPredicate moves the deterministic
+    ``kept`` filter (and with it the whole metric computation) below the
+    exchange, back into the single-split scan (measured: 26.7 s with no
+    spread, 28.9 s with spread alone).  The checkpoint is a plan
+    leaf, so nothing is pushed below it and the gate predicates evaluate
+    across its spread partitions.  At real scale the input arrives in
+    thousands of splits and both guards no-op."""
     from melody_join_spark.operators.dedup import _spread, dedup_paragraphs
 
-    docs = _spread(_docs(spark, sf_dir)).persist()
-    docs.count()
+    docs = _spread(_docs(spark, sf_dir)).localCheckpoint(eager=True)
     qk = quality_filter(docs).where("kept").select("doc_id")
     rk = repetition_filter(docs).where("kept").select("doc_id")
     base = docs.join(qk, "doc_id").join(rk, "doc_id").select(
         "doc_id", "text"
     )
-    # persist the cleaned corpus (round 12): the LM TRAINING pass
-    # (unigram_lm's token count) and the final scoring plan both consume
-    # dp, so without the cache the gate joins + paragraph-dedup chain
-    # executed twice end-to-end.  Training runs first and is a single
-    # sequential action, so it materializes the cache without a
-    # concurrent-first-reader race; no count() barrier needed.
-    dp = dedup_paragraphs(base).persist()
-    out = perplexity_score(
+    # checkpoint the cleaned corpus: the LM TRAINING pass (unigram_lm's
+    # token count) and the final scoring plan both consume dp, so without
+    # it the gate joins + paragraph-dedup chain execute twice end-to-end
+    dp = dedup_paragraphs(base).localCheckpoint(eager=True)
+    return perplexity_score(
         dp, text_col="text_clean", vocab_size=LM_VOCAB
     ).orderBy("doc_id")
-    return release_on_gc(out, docs, dp)
 
 
 def _pipeline_llm_prep_oracle_sql() -> str:

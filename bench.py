@@ -20,6 +20,7 @@ min-of-n with the contention context attached.
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import sys
@@ -37,6 +38,11 @@ def _pcts(stat0: list[int], stat1: list[int]) -> tuple[float | None, float]:
     steal = round(100.0 * d[7] / tot, 2) if len(d) > 7 else None
     busy = round(100.0 * (tot - d[3]) / tot, 2)
     return steal, busy
+
+
+def _rdd_storage(spark) -> list[int]:
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return [len(infos), sum(int(i.memSize()) + int(i.diskSize()) for i in infos)]
 
 
 def main() -> None:
@@ -65,6 +71,9 @@ def main() -> None:
     # tables become interpretable without re-running
     query_busy: dict[str, list[float]] = {name: [] for name in qs}
     query_t0: dict[str, list[float]] = {name: [] for name in qs}
+    # [RDDs holding blocks, bytes stored] after each query's release: the
+    # proof that storage does not grow across a pass
+    rdd_storage: dict[str, list[list[int]]] = {name: [] for name in qs}
     # Contention-aware stopping (round-8 VERDICT next #1): the old fixed
     # 1000-s budget truncated a contended round to min-of-2, defeating the
     # exact defense min-of-n exists for.  Now a run only counts as CLEAN
@@ -119,19 +128,16 @@ def main() -> None:
             query_t0[name].append(round(t0, 1))
             print(f"# run{r} {name}: {n} rows in {dt:.2f}s (busy {qbusy}%)",
                   file=sys.stderr, flush=True)
-            # queries persist self-join inputs; drop them so later queries
-            # don't inherit the accumulated cache/GC pressure
+            # release query N's intermediates before query N+1 (outside any
+            # timed window): clearCache drops persisted frames; operators
+            # hold the rest as local checkpoints, which the ContextCleaner
+            # frees once python GC has dropped the DataFrame handles and a
+            # JVM GC has collected the RDDs
+            del df
             spark.catalog.clearCache()
-            if os.environ.get("SPARK_GRAFT_BENCH_GC"):
-                # full cross-runtime GC barrier BETWEEN queries (outside any
-                # timed window): python GC drops DataFrame/broadcast handles,
-                # JVM GC lets the ContextCleaner reclaim their broadcasts and
-                # shuffle files, so query N+1's wall doesn't pay query N's
-                # collection debt
-                import gc
-
-                gc.collect()
-                spark.sparkContext._jvm.System.gc()
+            gc.collect()
+            spark.sparkContext._jvm.System.gc()
+            rdd_storage[name].append(_rdd_storage(spark))
         steal, busy = _pcts(stat0, _cpu_stat())
         busy_per_run.append(busy)
         steal_per_run.append(steal)
@@ -165,6 +171,7 @@ def main() -> None:
                 "runs": runs,
                 "query_host_busy": query_busy,
                 "query_t_start": query_t0,
+                "query_rdd_storage": rdd_storage,
                 "host_busy_per_run": busy_per_run,
                 "host_steal_per_run": steal_per_run,
                 # back-compat aggregate context

@@ -165,16 +165,14 @@ def run_generate_from_properties(
     ] or ["ch"]
 
     media = None
-    crawled = None
     if mode in ("http", "url"):
         urls = spark.read.text(in_path).select(F.col("value").alias("url"))
         media = crawl_media(urls).where(F.col("error").isNull()).drop("error")
         if len(features) > 1:
-            # persist the crawl snapshot: every enabled feature would
+            # checkpoint the crawl snapshot: every enabled feature would
             # otherwise re-trigger the full URL fetch, and flaky fetches
             # could make features see DIFFERENT document sets in one run
-            media = media.persist()
-            crawled = media
+            media = media.localCheckpoint(eager=True)
 
     out: dict[str, DataFrame] = {}
     for feat in features:
@@ -194,12 +192,4 @@ def run_generate_from_properties(
         out[feat] = hist
         if write_output and out_dir:
             generate_to_text(hist, f"{out_dir.rstrip('/')}/{feat}")
-    if crawled is not None:
-        # one registration: the snapshot lives while any write_output
-        # materialization above runs; afterwards it follows the last
-        # feature frame's lifetime (early release = recompute, never
-        # correctness — cache.py contract)
-        from .cache import release_on_gc
-
-        release_on_gc(next(reversed(out.values())), crawled)
     return out

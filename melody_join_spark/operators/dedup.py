@@ -318,8 +318,8 @@ def dup_clusters(
     transitive, but a 100-TB cleaning pipeline wants whole dup CLUSTERS
     (keep one representative per component, audit the rest).
 
-    ``algorithm='auto'`` (default): persist the edge relation, count it at
-    full parallelism, and when it fits collect it from the cache and run
+    ``algorithm='auto'`` (default): checkpoint the edge relation at full
+    parallelism, count it, and when it fits collect it and run
     exact union-find on the driver — one job instead of 3-5 iterative
     rounds of window-min + checkpoint machinery (measured ~7 s of fixed
     per-round cost on a 256-edge graph).  (NOT a bare
@@ -345,20 +345,19 @@ def dup_clusters(
     input row gets a cluster (itself when it has no dup edge).
     """
     if algorithm == "auto":
-        # persist + count FIRST, then read the probe from the cache.  A bare
+        # checkpoint FIRST, then count and collect the checkpoint.  A bare
         # limit(N+1).collect() on the raw plan goes through CollectLimit's
         # incremental execution (1 partition, then 4, 16, ... until N+1 rows
         # or exhaustion), which re-runs the expensive upstream pairs chain
         # (tokenize + prefix join + verify) serially at low parallelism —
-        # measured 38.7 s vs 9.4 s for the jaccard-fed bench query.  count()
-        # materializes the same chain ONCE at full parallelism.
+        # measured 38.7 s vs 9.4 s for the jaccard-fed bench query.  The
+        # checkpoint materializes the same chain ONCE at full parallelism.
         edge_probe = pairs.select(
             F.col("rid").cast("long").alias("a"),
             F.col("sid").cast("long").alias("b"),
-        ).persist()
+        ).localCheckpoint(eager=True)
         if edge_probe.count() <= driver_threshold:
             probe = edge_probe.collect()
-            edge_probe.unpersist()
             return _driver_union_find(
                 pairs.sparkSession, [(r.a, r.b) for r in probe], ids, id_col
             )
@@ -366,7 +365,7 @@ def dup_clusters(
     else:
         edge_probe = None
     if algorithm == "star":
-        # consume the already-cached (a, b) relation when auto fell through
+        # consume the checkpointed (a, b) relation when auto fell through
         edges_ab = (
             edge_probe
             if edge_probe is not None
@@ -376,8 +375,6 @@ def dup_clusters(
             )
         )
         star = _star_rounds(edges_ab, max_iter)
-        from ..cache import release_on_gc
-
         # stable star edges point node -> component min; roots and isolated
         # nodes label themselves
         members = star.select("a", F.col("b").alias("lbl")).unionByName(
@@ -388,7 +385,7 @@ def dup_clusters(
             nodes = nodes.unionByName(
                 ids.select(F.col(id_col).cast("long").alias("a"))
             )
-        out = (
+        return (
             nodes.distinct()
             .join(members.groupBy("a").agg(F.min("lbl").alias("lbl")), "a", "left")
             .select(
@@ -396,8 +393,6 @@ def dup_clusters(
                 F.coalesce("lbl", F.col("a")).alias("cluster_id"),
             )
         )
-        cached = (star,) if edge_probe is None else (star, edge_probe)
-        return release_on_gc(out, *cached)
     if algorithm != "label":
         raise ValueError(f"unknown algorithm {algorithm!r}")
     # symmetric edges from ONE pass over pairs: a union of two selects would
@@ -417,7 +412,7 @@ def dup_clusters(
                 ),
             )
         ).alias("e")
-    ).select("e.a", "e.b").persist()
+    ).select("e.a", "e.b").localCheckpoint(eager=True)
     nodes = edges.select("a").distinct()
     if ids is not None:
         nodes = nodes.unionByName(
@@ -456,13 +451,8 @@ def dup_clusters(
         if changed == 0:
             break
     else:
-        edges.unpersist()
         raise RuntimeError(f"dup_clusters did not converge in {max_iter} rounds")
-    edges.unpersist()
-    from ..cache import release_on_gc
-
-    out = labels.select(F.col("a").alias("id"), F.col("lbl").alias("cluster_id"))
-    return release_on_gc(out, labels)
+    return labels.select(F.col("a").alias("id"), F.col("lbl").alias("cluster_id"))
 
 
 def dup_clusters_oracle_sql(pairs_sql: str, ids_sql: str | None = None) -> str:
@@ -552,7 +542,7 @@ def _verify_jaccard(
     hundred tokens each is multi-GB — far past any broadcast budget even
     though the row count looks small.  Above the budget the plan falls back
     to shuffle joins (AQE still re-plans the actual sizes)."""
-    # docs is persisted by every caller: one cheap agg sizes the broadcast
+    # docs is checkpointed by every caller: one cheap agg sizes the broadcast
     docs_b = docs if docs_b is None else docs_b
     n_docs, tot_toks = docs.agg(
         F.count("*"), F.coalesce(F.sum("nt"), F.lit(0))
@@ -689,10 +679,11 @@ def jaccard_pairs(
     prefix_len = (
         F.col("nt") - F.ceil(F.lit(float(threshold)) * F.col("nt") - F.lit(1e-9)) + 1
     )
-    # docs feeds the prefix explode AND both verify sides: persist, or the
-    # tokenize+freq+vocab+groupBy chain runs three times
-    docs = docs.withColumn("prefix", F.slice("toks", F.lit(1), prefix_len)).persist()
-    from ..cache import release_on_gc
+    # docs feeds the prefix explode AND both verify sides: checkpoint, or
+    # the tokenize+freq+vocab+groupBy chain runs three times
+    docs = docs.withColumn(
+        "prefix", F.slice("toks", F.lit(1), prefix_len)
+    ).localCheckpoint(eager=True)
     pr = docs.select("id", "nt", F.posexplode("prefix").alias("p", "tok"))
     # cross-corpus: restrict the join SIDES up front (side bit encoded in
     # the id), so same-side candidate pairs never materialize
@@ -729,6 +720,13 @@ def jaccard_pairs(
             >= alpha
         )
         .select("rid", "sid")
+        # pin the candidate exchange: the checkpoint leaf carries no output
+        # partitioning, so distinct shuffles, and AQE would coalesce the
+        # tiny id pairs onto a few tasks that then run the CPU-heavy verify
+        # (measured +6 s of 24 s at sf0.1 on 4 cores)
+        .repartition(
+            int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")), "rid"
+        )
         .distinct()
     )
     out = _verify_jaccard(cand, docs, threshold)
@@ -738,7 +736,7 @@ def jaccard_pairs(
             F.shiftright(F.col("sid") - 1, 1).alias("sid"),
             "jaccard",
         )
-    return release_on_gc(out, docs)
+    return out
 
 
 def jaccard_pairs_oracle_sql(
@@ -812,9 +810,9 @@ def winnow_pairs(
       3. self-equi-join on fp (reuses the window's hash partitioning),
          group to common counts, then attach per-doc set sizes from a slim
          (id, n_fp) aggregate for the Jaccard denominator.  ``sizes`` is
-         persisted (round 12): its broadcast is built once per join SIDE
+         checkpointed (round 12): its broadcast is built once per join SIDE
          and each build re-ran the aggregate serially inside the broadcast
-         future — the cache makes the second build a cache read.  (A round-
+         future — the checkpoint makes the second build a block read.  (A round-
          12 attempt to remove the Window sort and carry n_fp through the
          self-join instead measured 2.6x WORSE — AQE turned one of the
          rewritten broadcast builds into an 8 s single-task stage — and was
@@ -827,16 +825,23 @@ def winnow_pairs(
     ).select(F.col(id_col).alias("id"), "fps")
     ex0 = fp.select("id", F.explode("fps").alias("fp"))
     total = df.agg(F.count("*").alias("__n_docs"))
-    # persist: ex feeds THREE plan branches (sizes + both self-join sides);
-    # without it the codegen fingerprint scan + fp window re-run per branch
+    # checkpoint: ex feeds THREE plan branches (sizes + both self-join
+    # sides); without it the codegen fingerprint scan + fp window re-run
+    # per branch.  The explicit fp partitioning serves the window and keeps
+    # the checkpoint at full width: AQE would coalesce the window's exchange
+    # onto a few partitions, which then stream the CPU-heavy fp self-join
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     ex = (
-        ex0.withColumn("df_", F.count("*").over(Window.partitionBy("fp")))
+        ex0.repartition(n_part, "fp")
+        .withColumn("df_", F.count("*").over(Window.partitionBy("fp")))
         .join(F.broadcast(total))
         .filter(F.col("df_") <= F.col("__n_docs") * F.lit(max_df_frac))
         .select("id", "fp")
-        .persist()
+        .localCheckpoint(eager=True)
     )
-    sizes = ex.groupBy("id").agg(F.count("*").alias("n_fp")).persist()
+    sizes = ex.groupBy("id").agg(F.count("*").alias("n_fp")).localCheckpoint(
+        eager=True
+    )
     a, b = ex.alias("a"), ex.alias("b")
     inter = (
         a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.id") < F.col("b.id")))
@@ -844,7 +849,7 @@ def winnow_pairs(
         .agg(F.count("*").alias("n_common"))
     )
     na, nb = sizes.alias("na"), sizes.alias("nb")
-    res = (
+    return (
         inter.join(na, F.col("doc_a") == F.col("na.id"))
         .join(nb, F.col("doc_b") == F.col("nb.id"))
         .withColumn(
@@ -858,9 +863,6 @@ def winnow_pairs(
         .filter((F.col("n_common") >= min_common) & (F.col("sim") >= threshold))
         .select("doc_a", "doc_b", "n_common", "sim")
     )
-    from ..cache import release_on_gc
-
-    return release_on_gc(res, ex, sizes)
 
 
 def winnow_pairs_oracle_sql(
@@ -1023,7 +1025,7 @@ def _jaccard_tokens(df: DataFrame, id_col: str, text_col: str, shingle: int) -> 
     """(id, toks, nt) character-shingle token table for exact verification.
 
     ``_spread`` matters here even though the tokenize is a scan-stage
-    expression: every caller persists this relation and immediately sizes
+    expression: every caller checkpoints this relation and immediately sizes
     it with an agg (`_verify_jaccard`'s broadcast gate), so on a corpus
     arriving as one file split the ENTIRE shingle tokenize executed as a
     single task — profiled at sf0.1 as ~2-4 s of one-core wall inside
@@ -1063,11 +1065,10 @@ def minhash_lsh_pairs(
     banded equi-join, no ordering constraint, each side's signatures
     computed once.  Id namespaces are independent; pairs are (df id,
     other id)."""
+    # both join sides derive from the signature pandas-UDF chain
     band_keys = _minhash_band_keys(
         df, id_col, text_col, num_hashes, bands, shingle, seed
-    ).persist()  # both join sides derive from the signature pandas-UDF chain
-    from ..cache import release_on_gc
-
+    ).localCheckpoint(eager=True)
     if other is None:
         a = band_keys.select(F.col("id").alias("rid"), "band", "key")
         b = band_keys.select(F.col("id").alias("sid"), "band", "key")
@@ -1077,28 +1078,26 @@ def minhash_lsh_pairs(
             .select("rid", "sid")
             .distinct()
         )
-        docs = _jaccard_tokens(df, id_col, text_col, shingle).persist()
-        return release_on_gc(
-            _verify_jaccard(cand, docs, threshold), band_keys, docs
+        docs = _jaccard_tokens(df, id_col, text_col, shingle).localCheckpoint(
+            eager=True
         )
+        return _verify_jaccard(cand, docs, threshold)
     other_keys = _minhash_band_keys(
         other, id_col, text_col, num_hashes, bands, shingle, seed
-    ).persist()
+    ).localCheckpoint(eager=True)
     cand = (
         band_keys.select(F.col("id").alias("rid"), "band", "key")
         .join(other_keys.select(F.col("id").alias("sid"), "band", "key"), ["band", "key"])
         .select("rid", "sid")
         .distinct()
     )
-    docs_a = _jaccard_tokens(df, id_col, text_col, shingle).persist()
-    docs_b = _jaccard_tokens(other, id_col, text_col, shingle).persist()
-    return release_on_gc(
-        _verify_jaccard(cand, docs_a, threshold, docs_b=docs_b),
-        band_keys,
-        other_keys,
-        docs_a,
-        docs_b,
+    docs_a = _jaccard_tokens(df, id_col, text_col, shingle).localCheckpoint(
+        eager=True
     )
+    docs_b = _jaccard_tokens(other, id_col, text_col, shingle).localCheckpoint(
+        eager=True
+    )
+    return _verify_jaccard(cand, docs_a, threshold, docs_b=docs_b)
 
 
 # ---------------------------------------------------------------------------
@@ -1152,11 +1151,12 @@ def simhash_pairs(
         F.shiftrightunsigned("simhash", c * width).bitwiseAND(F.lit((1 << width) - 1))
         for c in range(chunks)
     ]
+    # both join sides derive from the simhash pandas-UDF chain
     keys = sh.select(
         "id",
         "simhash",
         F.posexplode(F.array(*chunk_exprs)).alias("chunk", "key"),
-    ).persist()  # both join sides derive from the simhash pandas-UDF chain
+    ).localCheckpoint(eager=True)
     a = keys.select(F.col("id").alias("rid"), F.col("simhash").alias("ha"), "chunk", "key")
     b = keys.select(F.col("id").alias("sid"), F.col("simhash").alias("hb"), "chunk", "key")
     cand = (
@@ -1166,12 +1166,9 @@ def simhash_pairs(
         .distinct()
     )
     ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    from ..cache import release_on_gc
-
-    out = cand.select("rid", "sid", ham.alias("hamming")).where(
+    return cand.select("rid", "sid", ham.alias("hamming")).where(
         F.col("hamming") <= max_hamming
     )
-    return release_on_gc(out, keys)
 
 
 def dedupe_incremental(
@@ -1288,7 +1285,7 @@ def dedupe_embeddings(
     pre-round-7 default semantics), and fractional targets escalate the
     IVF probe count (:func:`similarity.derive_nprobe`).  ``n=`` skips the
     dispatch count when the embedding count is already known (a DERIVED
-    embedding relation is otherwise persisted around dispatch so its
+    embedding relation is otherwise checkpointed before dispatch so its
     upstream executes once, not twice).  Documents without an embedding
     row are kept (nothing to compare).  One anti-join either way."""
     from .similarity import similar_pairs
@@ -1377,60 +1374,53 @@ def dedup_paragraphs(
     t = F.coalesce(F.col(text_col), F.lit(""))
     src = df.select(
         F.col(id_col).alias("_id"), doc_lines(t).alias("_lines")
-    ).persist()
-    try:
-        ex = src.select(
-            "_id", F.posexplode("_lines").alias("_pos", "_line")
+    ).localCheckpoint(eager=True)
+    ex = src.select(
+        "_id", F.posexplode("_lines").alias("_pos", "_line")
+    ).withColumn("_fp", F.md5(F.lower(F.col("_line"))))
+    if against is not None:
+        ta = F.coalesce(F.col(text_col), F.lit(""))
+        flag_src = against.select(
+            F.col(id_col).alias("_id"), doc_lines(ta).alias("_lines")
+        ).select(
+            "_id", F.explode("_lines").alias("_line")
         ).withColumn("_fp", F.md5(F.lower(F.col("_line"))))
-        if against is not None:
-            ta = F.coalesce(F.col(text_col), F.lit(""))
-            flag_src = against.select(
-                F.col(id_col).alias("_id"), doc_lines(ta).alias("_lines")
-            ).select(
-                "_id", F.explode("_lines").alias("_line")
-            ).withColumn("_fp", F.md5(F.lower(F.col("_line"))))
-        else:
-            flag_src = ex
-        # two-stage distinct-doc count (the build_vocab pattern: no expand)
-        flagged = (
-            flag_src.groupBy("_fp", "_id")
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .groupBy("_fp")
-            .agg(F.count(F.lit(1)).alias("_ndocs"))
-            .where(F.col("_ndocs") >= int(min_docs))
-            .select("_fp")
-        )
-        surv = ex.join(flagged, "_fp", "anti")
-        rebuilt = surv.groupBy("_id").agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("_pos", "_line"))
-                    ),
-                    lambda s: s["_line"],
+    else:
+        flag_src = ex
+    # two-stage distinct-doc count (the build_vocab pattern: no expand)
+    flagged = (
+        flag_src.groupBy("_fp", "_id")
+        .agg(F.count(F.lit(1)).alias("_c"))
+        .groupBy("_fp")
+        .agg(F.count(F.lit(1)).alias("_ndocs"))
+        .where(F.col("_ndocs") >= int(min_docs))
+        .select("_fp")
+    )
+    surv = ex.join(flagged, "_fp", "anti")
+    rebuilt = surv.groupBy("_id").agg(
+        F.array_join(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.struct("_pos", "_line"))
                 ),
-                "\n",
-            ).alias("text_clean"),
-            F.count(F.lit(1)).alias("_kept"),
+                lambda s: s["_line"],
+            ),
+            "\n",
+        ).alias("text_clean"),
+        F.count(F.lit(1)).alias("_kept"),
+    )
+    return (
+        src.join(rebuilt, "_id", "left")
+        .select(
+            F.col("_id").alias(id_col),
+            F.coalesce("text_clean", F.lit("")).alias("text_clean"),
+            F.size("_lines").cast("long").alias("n_paragraphs"),
+            (
+                F.size("_lines").cast("long")
+                - F.coalesce("_kept", F.lit(0)).cast("long")
+            ).alias("n_removed"),
         )
-        out = (
-            src.join(rebuilt, "_id", "left")
-            .select(
-                F.col("_id").alias(id_col),
-                F.coalesce("text_clean", F.lit("")).alias("text_clean"),
-                F.size("_lines").cast("long").alias("n_paragraphs"),
-                (
-                    F.size("_lines").cast("long")
-                    - F.coalesce("_kept", F.lit(0)).cast("long")
-                ).alias("n_removed"),
-            )
-        )
-        from ..cache import release_on_gc
-
-        return release_on_gc(out, src)
-    except Exception:
-        src.unpersist()
-        raise
+    )
 
 
 def dedup_paragraphs_oracle_sql(

@@ -105,7 +105,7 @@ def emd_index_build(
     rec = hist.where(mass).select(
         F.col(id_col).cast("long").alias("id"), F.col(w_col).alias("w")
     )
-    rec0 = _centroid_cols(rec, bin_points, "w").persist()
+    rec0 = _centroid_cols(rec, bin_points, "w").localCheckpoint(eager=True)
     bnds = _grid_boundaries(rec0, d, grid)
     # deterministic dual seeds: hash-ordered sample, stored in the manifest
     # so load() rebuilds the IDENTICAL config
@@ -122,7 +122,7 @@ def emd_index_build(
     # large or duplicate-heavy table can leave both unchanged, and a
     # manifest keyed only on them would short-circuit the rebuild and
     # silently serve stale records.  One order-independent JVM agg over the
-    # already-persisted rec0 (count + sum of per-row xxhash64(id, w))
+    # already-checkpointed rec0 (count + sum of per-row xxhash64(id, w))
     # guarantees the build id moves whenever the data does, while
     # genuinely-identical inputs still short-circuit.  The sum runs in
     # decimal(38,0) so it never wraps/overflows regardless of row count.
@@ -161,19 +161,16 @@ def emd_index_build(
     if os.path.exists(cur):
         with open(cur) as fh:
             if fh.read().strip() == build_id:
-                rec0.unpersist()
                 return emd_index_load(spark, path)
 
-    # parallelism floor AFTER rec0 is materialized (the boundary agg and
-    # seed sample above scan it): a small-but-dense table arriving as ONE
-    # byte-sized scan split would otherwise serialize the partitioned-by-
-    # cell write into a single task; probing the cached relation costs no
-    # extra upstream execution (see emd_join_nd._build_grid_ctx)
+    # parallelism floor on the checkpointed rec0: a small-but-dense table
+    # arriving as ONE byte-sized scan split would otherwise serialize the
+    # partitioned-by-cell write into a single task; probing the checkpoint
+    # costs no extra upstream execution (see emd_join_nd._build_grid_ctx)
     out = _parallelism_floor(rec0, rec0.count()).withColumn(
         "cell", _cell_expr(bnds, grid)
     )
     out.write.mode("overwrite").partitionBy("cell").parquet(f"{vdir}/records")
-    rec0.unpersist()
     spark.createDataFrame(
         [(json.dumps(manifest),)], "manifest string"
     ).coalesce(1).write.mode("overwrite").parquet(f"{vdir}/manifest")

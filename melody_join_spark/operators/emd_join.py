@@ -81,6 +81,26 @@ def _pair_frame(hist: DataFrame, side: str) -> DataFrame:
     return hist.select(*[F.col(c).alias(f"{c}_{side}") for c in keep])
 
 
+def _wide_checkpoint(df: DataFrame) -> DataFrame:
+    """Eager local checkpoint at the session's shuffle width.  Its scan is
+    the stream side of the CPU-heavy pair joins, and AQE would otherwise
+    have coalesced the small histogram table onto a few partitions."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n).localCheckpoint(eager=True)
+
+
+def _fits_broadcast(h: DataFrame) -> bool:
+    """Whether a checkpointed histogram table fits the session's broadcast
+    threshold.  A checkpoint's size statistic is the estimate of the plan it
+    came from, often far above the real size, which turns the pair join into
+    a sort-merge join (measured 1.6-2.2x on the sf0.1 cells queries)."""
+    n, cells = h.agg(
+        F.count(F.lit(1)), F.coalesce(F.sum(F.size("cum")), F.lit(0))
+    ).first()
+    conf = h.sparkSession._jsparkSession.sessionState().conf()
+    return 8 * cells + 40 * n <= conf.autoBroadcastJoinThreshold()
+
+
 def emd_threshold_join(
     hist: DataFrame,
     threshold: float,
@@ -103,17 +123,24 @@ def emd_threshold_join(
         # on cell, and each (r, s) pair meets exactly once (at s's cell).
         # Pure codegen like the self-join path.
         cw = float(threshold)
-        # persist each side like the self-join path persists h: without the
-        # materialization boundary, CollapseProject inlines the O(B^2) cum
-        # expression into the per-PAIR emd expression — measured 7x slower
-        hr = with_mean_position(hist, positions).withColumn(
-            "cell", F.floor(F.col("mpos") / F.lit(cw)).cast("long")
-        ).persist()
-        hs = with_mean_position(other, positions).withColumn(
-            "cell", F.floor(F.col("mpos") / F.lit(cw)).cast("long")
-        ).persist()
+        # checkpoint each side like the self-join path checkpoints h:
+        # without the materialization boundary, CollapseProject inlines the
+        # O(B^2) cum expression into the per-PAIR emd expression — measured
+        # 7x slower
+        hr = _wide_checkpoint(
+            with_mean_position(hist, positions).withColumn(
+                "cell", F.floor(F.col("mpos") / F.lit(cw)).cast("long")
+            )
+        )
+        hs = _wide_checkpoint(
+            with_mean_position(other, positions).withColumn(
+                "cell", F.floor(F.col("mpos") / F.lit(cw)).cast("long")
+            )
+        )
         a = _pair_frame(hr, "a")
         b = _pair_frame(hs, "b")
+        if _fits_broadcast(hs):
+            b = F.broadcast(b)
         a = a.withColumn(
             "probe",
             F.explode(
@@ -125,11 +152,7 @@ def emd_threshold_join(
         pairs = a.join(b, on=[a.probe == b.cell_b]).where(
             F.abs(F.col("mpos_a") - F.col("mpos_b")) <= F.lit(cw)
         )
-        from ..cache import release_on_gc
-
-        return release_on_gc(
-            _finish_threshold(pairs, threshold, positions), hr, hs
-        )
+        return _finish_threshold(pairs, threshold, positions)
     if strategy == "bruteforce":
         h = with_mean_position(hist, positions)
         # spread the cartesian across tasks (a small cached side otherwise
@@ -154,17 +177,17 @@ def emd_threshold_join(
     h = with_mean_position(hist, positions)
     # cell width = threshold: matching pairs differ by at most one cell id
     h = h.withColumn("cell", F.floor(F.col("mpos") / F.lit(float(threshold))).cast("long"))
-    # h feeds both sides of two joins; persist so the upstream (scan + agg +
-    # O(B^2) cum expression) runs once.  A histogram row is ~8B + 16*B bytes —
-    # tiny relative to the fact table it came from, so this holds at scale.
-    # The count() is a materialization BARRIER, not a stat: the two joins
-    # fan out into four exchange map stages that AQE materializes
-    # concurrently, and concurrent first readers of an unmaterialized cache
-    # RACE — each recomputed the whole upstream chain (four full media
-    # decodes measured on the generate->join path, guide §5 caching).
-    h = h.persist()
-    h.count()
+    # h feeds both sides of two joins; checkpoint so the upstream (scan +
+    # agg + O(B^2) cum expression) runs once.  A histogram row is ~8B + 16*B
+    # bytes — tiny relative to the fact table it came from, so this holds at
+    # scale.  The checkpoint is eager: the two joins fan out into four
+    # exchange map stages that AQE runs concurrently, and concurrent first
+    # readers of an unmaterialized intermediate each recompute the upstream
+    # chain.
+    h = _wide_checkpoint(h)
     a, b = _pair_frame(h, "a"), _pair_frame(h, "b")
+    if _fits_broadcast(h):
+        b = F.broadcast(b)
 
     # same-cell pairs, dedup by id ordering
     same = a.join(b, on=[a.cell_a == b.cell_b, a.id_a < b.id_b])
@@ -179,16 +202,11 @@ def emd_threshold_join(
         )
         out.append(_finish_threshold(pruned, threshold, positions))
     res = out[0].unionAll(out[1])
-    from ..cache import release_on_gc
-
     # normalize pair order to rid < sid for output parity with the oracle
-    return release_on_gc(
-        res.select(
-            F.least("rid", "sid").alias("rid"),
-            F.greatest("rid", "sid").alias("sid"),
-            "emd",
-        ),
-        h,
+    return res.select(
+        F.least("rid", "sid").alias("rid"),
+        F.greatest("rid", "sid").alias("sid"),
+        "emd",
     )
 
 
@@ -236,8 +254,8 @@ def emd_topk_join(
 
     n_pairs_needed = k
     # three actions consume hist (seed sample, both cell-join sides):
-    # persist once
-    hist = hist.persist()
+    # checkpoint once
+    hist = hist.localCheckpoint(eager=True)
     # deterministic seed sample in xxhash64(id) order — stable across
     # runs/partitionings like the reference's seeded random sample
     # (NEPreMapper.java:130-132), but unbiased on id-clustered data where
@@ -253,17 +271,11 @@ def emd_topk_join(
     )
     seed_emds = [r.emd for r in spairs.select("emd").orderBy("emd").limit(n_pairs_needed).collect()]
     if len(seed_emds) < n_pairs_needed:
-        from ..cache import release_on_gc
-
-        return release_on_gc(
-            emd_topk_join(hist, k, positions, strategy="bruteforce"), hist
-        )
+        return emd_topk_join(hist, k, positions, strategy="bruteforce")
     bound = float(seed_emds[-1])
 
     cand = emd_threshold_join(hist, max(bound, 1e-12), positions, strategy="cells")
-    from ..cache import release_on_gc
-
-    return release_on_gc(_rank_topk(cand, k), hist)
+    return _rank_topk(cand, k)
 
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:

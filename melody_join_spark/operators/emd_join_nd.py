@@ -40,7 +40,6 @@ closure — the DistributedCache side files of the reference
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from dataclasses import dataclass, field
 
@@ -293,6 +292,28 @@ def _emit_pairs(ids, li, ri, emds, ordered: bool = False) -> pd.DataFrame:
 _FLOOR_ROWS_PER_TASK = 128
 
 
+def _materialized(df: DataFrame) -> bool:
+    """True when every leaf of ``df``'s plan is already materialized: a
+    cached relation, or an RDD leaf whose RDD is stored (an eager
+    ``localCheckpoint``).  Reading such a frame re-runs no upstream chain;
+    a leaf over a plain RDD or a file scan does not count."""
+    lvl = df.storageLevel
+    if lvl.useMemory or lvl.useDisk:
+        return True
+    leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind == "LogicalRDD":
+            lvl = leaf.rdd().getStorageLevel()
+            if lvl.useMemory() or lvl.useDisk():
+                continue
+        elif kind == "InMemoryRelation":
+            continue
+        return False
+    return True
+
+
 def _parallelism_floor(df: DataFrame, n_rows: int | None = None) -> DataFrame:
     """Guarantee CPU parallelism for the per-record Python stages.
 
@@ -310,26 +331,16 @@ def _parallelism_floor(df: DataFrame, n_rows: int | None = None) -> DataFrame:
     MISUSE GUARD: probing ``df.rdd.getNumPartitions()`` EXECUTES the
     upstream plan when the relation is not already materialized (measured
     +4.0-4.6 s per call on the sf0.1 bridge chains, ABCHECK_r05 §5) — so
-    this helper refuses inputs that are not persisted, leaving a third
+    this helper refuses inputs that are not materialized, leaving a third
     call site no way to silently pay an extra chain execution (round-5
-    VERDICT next #7).  Both call sites probe cached relations by design.
+    VERDICT next #7).  Every call site probes a checkpoint by design.
     """
-    lvl = df.storageLevel
-    if not (lvl.useMemory or lvl.useDisk):
-        # a narrow projection of a persisted frame is also fine (its own
-        # storageLevel reads NONE but the probe hits the InMemoryRelation);
-        # check the cache-substituted plan for one
-        try:
-            plan = df._jdf.queryExecution().withCachedData().toString()
-        except Exception:
-            plan = df._jdf.queryExecution().optimizedPlan().toString()
-        if "InMemoryRelation" not in plan:
-            raise ValueError(
-                "_parallelism_floor requires a persisted (cache-backed) "
-                "input: probing partition count on a raw chain re-executes "
-                "it. persist() the relation first (see "
-                "emd_join_nd._build_grid_ctx)."
-            )
+    if not _materialized(df):
+        raise ValueError(
+            "_parallelism_floor requires a materialized input (a "
+            "localCheckpoint or a persisted frame): probing partition count "
+            "on a raw chain re-executes it (see emd_join_nd._build_grid_ctx)."
+        )
     target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
     if n_rows is not None:
         # row-aware cap: >= ~_FLOOR_ROWS_PER_TASK rows per task.  Tiny
@@ -338,8 +349,8 @@ def _parallelism_floor(df: DataFrame, n_rows: int | None = None) -> DataFrame:
         # (round-6 A/B, BENCHAB_r06.md), a pure overhead tax — while the
         # regimes the floor exists for keep the cap (sf0.1 bridge 5.8k
         # rows -> 46 > 32 unchanged; sf1 57k rows -> cap).  Callers pass
-        # the count of the already-materialized cache, so this costs no
-        # extra job.
+        # the count of the already-materialized checkpoint, so this costs
+        # no extra upstream execution.
         target = min(target, max(1, -(-n_rows // _FLOOR_ROWS_PER_TASK)))
     if df.rdd.getNumPartitions() < target:
         df = df.repartition(target)
@@ -560,8 +571,8 @@ def emd_join_nd(
     if bin_points.shape[0] == 1 and bin_points.shape[1] > 1:
         bin_points = bin_points.T
     # for the grid strategy, cfg seeding is DEFERRED into _build_grid_ctx so
-    # the seed sample reads the cached centroid table instead of re-running
-    # the (possibly expensive) upstream plan one extra time
+    # the seed sample reads the checkpointed centroid table instead of
+    # re-running the (possibly expensive) upstream plan one extra time
     if cfg is None and strategy != "grid":
         seed_rows = hist.select(w_col).limit(8).collect()
         sw = np.array([r[0] for r in seed_rows], dtype=np.float64)
@@ -586,13 +597,7 @@ def emd_join_nd(
             )
         )
 
-    from ..cache import release_on_gc
-
-    _auto_rec = None  # probe-persisted rec, released with the result
-
-    def _auto_wrap(df: DataFrame) -> DataFrame:
-        return release_on_gc(df, _auto_rec) if _auto_rec is not None else df
-
+    held = False  # rec already checkpointed by the auto probe
     if strategy == "auto":
         # physical-strategy pick, Catalyst-style: the caller states WHAT
         # (threshold join under this ground), the engine picks HOW.
@@ -611,12 +616,12 @@ def emd_join_nd(
             )
         )
         small_probe = 512
-        # persist BEFORE the sizing probe: partitions the probe scans are
-        # cached, so the chosen strategy reuses them instead of re-running
-        # the upstream histogram build (ADVICE round-3: the same
-        # unpersisted-double-execution class as dup_clusters/pivot)
-        rec = rec.persist()
-        _auto_rec = rec
+        # checkpoint BEFORE the sizing probe: the chosen strategy reads the
+        # checkpoint instead of re-running the upstream histogram build
+        # (ADVICE round-3: the same double-execution class as
+        # dup_clusters/pivot)
+        rec = rec.localCheckpoint(eager=True)
+        held = True
         n_probe = rec.limit(small_probe + 1).count()
         if n_probe <= small_probe:
             strategy = "bruteforce"
@@ -633,7 +638,7 @@ def emd_join_nd(
             strategy = "grid"
 
     if strategy == "bruteforce":
-        return _auto_wrap(_block_bruteforce(rec, cfg, theta, num_blocks, two_table))
+        return _block_bruteforce(rec, cfg, theta, num_blocks, two_table)
     if strategy == "pivot":
         if two_table:
             raise ValueError("pivot strategy supports self-joins only")
@@ -651,19 +656,16 @@ def emd_join_nd(
                     "this matrix violates it; use strategy='bruteforce' "
                     "for a general cost matrix"
                 )
-        # persist: the pivot sample (orderBy+limit collect) and the
+        # checkpoint: the pivot sample (orderBy+limit collect) and the
         # assignment mapInPandas each consume rec — without the boundary the
         # upstream (histogram build at sf-scale) executes twice
-        rec_c = rec if _auto_rec is not None else rec.persist()
+        rec_c = rec if held else rec.localCheckpoint(eager=True)
         if num_pivots is None:
             num_pivots = _derive_pivots(
                 rec_c.count(), arbitrary_cost=cfg.rubner_ord is None
             )
-        return release_on_gc(
-            _pivot_join(
-                rec_c, cfg, theta, num_pivots=num_pivots, seed=seed, stats=stats
-            ),
-            rec_c,
+        return _pivot_join(
+            rec_c, cfg, theta, num_pivots=num_pivots, seed=seed, stats=stats
         )
     if strategy != "grid":
         raise ValueError(f"unknown strategy {strategy!r}")
@@ -708,35 +710,31 @@ def emd_join_nd(
 
         slack = cfg.slack if cfg is not None else 1e-4
         if two_table:
-            # persist the unioned record table BEFORE the side split: each
-            # .where(side=...) otherwise re-executes BOTH sides' upstream
-            # histogram builds (measured 2x the whole query)
-            rec_c = rec if _auto_rec is not None else rec.persist()
-            out = emd_threshold_join(
+            # checkpoint the unioned record table BEFORE the side split:
+            # each .where(side=...) otherwise re-executes BOTH sides'
+            # upstream histogram builds (measured 2x the whole query)
+            rec_c = rec if held else rec.localCheckpoint(eager=True)
+            return emd_threshold_join(
                 _prep(rec_c.where(F.col("side") == 0)),
                 theta + slack,
                 positions=pos[order],
                 strategy="cells",
                 other=_prep(rec_c.where(F.col("side") == 1)),
             )
-            return release_on_gc(out, rec_c)
-        return _auto_wrap(
-            emd_threshold_join(
-                _prep(rec), theta + slack, positions=pos[order], strategy="cells"
-            )
+        return emd_threshold_join(
+            _prep(rec), theta + slack, positions=pos[order], strategy="cells"
         )
 
     ctx = _build_grid_ctx(rec, bin_points, cfg, grid, seed=seed, ground=ground)
-    out = _grid_join(ctx, theta, stats=stats, two_table=two_table, cell_cap=cell_cap)
-    return _auto_wrap(release_on_gc(out, ctx.rec1))
+    return _grid_join(ctx, theta, stats=stats, two_table=two_table, cell_cap=cell_cap)
 
 
 @dataclass
 class _GridCtx:
     """Theta-independent grid state, built once and reusable across probe
-    radii (emd_topk_nd's escalation loop): the cached record table with
-    cell + stat columns, the quantile boundaries, and the per-cell screen
-    tables.  Call ``rec1.unpersist()`` when done."""
+    radii (emd_topk_nd's escalation loop): the checkpointed record table
+    with cell + stat columns, the quantile boundaries, and the per-cell
+    screen tables."""
 
     rec1: DataFrame
     bnds: np.ndarray
@@ -755,13 +753,13 @@ def _build_grid_ctx(
     ground: str | np.ndarray = "l2",
 ) -> _GridCtx:
     d = bin_points.shape[1]
-    # persist the centroid-annotated records BEFORE the driver-side stat
+    # checkpoint the centroid-annotated records BEFORE the driver-side stat
     # jobs: the quantile-boundary agg, the cfg seed sample, the stat-column
     # materialization and the cell-stat collect would otherwise each
     # re-execute the upstream plan (for the bench bridge tables that is a
     # 3-join + groupBy chain — measured ~40% of the whole d=2 query before
-    # this cache)
-    rec0 = _centroid_cols(rec, bin_points, "w").persist()
+    # this boundary)
+    rec0 = _centroid_cols(rec, bin_points, "w").localCheckpoint(eager=True)
     if grid is None:
         # ONE fused job for count + boundaries (round 12, guide §2.1/§2.6:
         # the auto-grid path used to pay two sequential driver actions —
@@ -797,7 +795,7 @@ def _build_grid_ctx(
                 )
                 for t in range(8)
             ]
-        row = rec0.agg(*aggs).collect()[0]  # materializes rec0
+        row = rec0.agg(*aggs).collect()[0]
         n_rec = int(row["n"])
         grid = _derive_grid(n_rec, d)
         want = np.arange(1, grid) / grid
@@ -817,8 +815,8 @@ def _build_grid_ctx(
                 seed=seed, ground=ground,
             )
     else:
-        bnds = _grid_boundaries(rec0, d, grid)  # materializes rec0
-        n_rec = rec0.count()  # cached by now: metadata-cheap
+        bnds = _grid_boundaries(rec0, d, grid)
+        n_rec = rec0.count()  # reads the checkpoint, not the upstream
     if cfg is None:
         seed_rows = rec0.select("w").limit(8).collect()
         sw = np.array([r[0] for r in seed_rows], dtype=np.float64)
@@ -833,18 +831,17 @@ def _build_grid_ctx(
         cell = cell * grid + idx_k
 
     stat_udf, stat_len = _stat_udf(cfg)
-    # the parallelism floor sits BETWEEN the caches, after rec0 is
-    # materialized (the boundary agg above always scans it): the partition
-    # probe then reads the in-memory relation without re-running the
-    # upstream plan — probing the RAW input instead would force AQE to
-    # execute the whole chain one extra time (measured ~4 s per query on
-    # the sf0.1 bridge tables).  rec1, the expensive per-record stat pass,
-    # is what actually needs the width; rec0's cheap JVM aggregates do not.
+    # the parallelism floor sits BETWEEN the checkpoints: the partition
+    # probe reads rec0's blocks without re-running the upstream plan —
+    # probing the RAW input instead would force AQE to execute the whole
+    # chain one extra time (measured ~4 s per query on the sf0.1 bridge
+    # tables).  rec1, the expensive per-record stat pass, is what actually
+    # needs the width; rec0's cheap JVM aggregates do not.
     rec1 = (
         _parallelism_floor(rec0, n_rec)
         .withColumn("cell", cell.cast("long"))
         .withColumn("st", stat_udf("w"))
-        .persist()
+        .localCheckpoint(eager=True)
     )
 
     # one agg over the (small) cell space: per-cell centroid bbox, per-cell
@@ -852,7 +849,6 @@ def _build_grid_ctx(
     # reference's NESpaceReducer cell-stat side files (NESpaceReducer.java:
     # 74-219) as a broadcastable numpy table
     cs = _collect_cell_stats(rec1, d, len(cfg.proj_positions), len(cfg.duals), grid**d)
-    rec0.unpersist()  # rec1 (a superset) is materialized now
     return _GridCtx(rec1, bnds, cs, cfg, d, grid)
 
 
@@ -977,7 +973,7 @@ def _grid_join(
 
     cent_struct = F.struct(*[F.col(f"cent_{k}") for k in range(d)])
     # single-read plan: each record explodes into 1 native + 0..k guest
-    # entries in one pass over rec1 (no self-union, so the cached input is
+    # entries in one pass over rec1 (no self-union, so the checkpoint is
     # scanned once by the final job)
     entries = F.concat(
         F.array(F.struct(F.col("cell").alias("c"), F.lit(True).alias("n"))),
@@ -1367,12 +1363,6 @@ def _pivot_join(
                 # A solved slot whose exact exceeds the cut is equally
                 # dropped by the JVM rule, so membership is unchanged.
                 D = np.where(np.isnan(EX), np.inf, EX)
-                if os.environ.get("MJS_PIVOT_PROFILE"):
-                    print(
-                        f"[assign-prof] n={n} slots_solved="
-                        f"{int(np.isfinite(D).sum())} of {n * P}",
-                        flush=True,
-                    )
             base = D.argmin(axis=1)
             yield pd.DataFrame(
                 {
@@ -1393,30 +1383,16 @@ def _pivot_join(
             StructField("dists", ArrayType(DoubleType())),
         ]
     )
-    # spread the assignment stage: its input is usually a persisted frame
+    # spread the assignment stage: its input is usually a checkpoint
     # whose final AQE stage coalesced to very few partitions, but the
     # per-record work here is LP-bound (exact EMDs to pivots) — measured
     # 6.7 s on ONE task at sf0.1.  A round-robin repartition of the tiny
     # (id, w) rows costs nothing next to the work it parallelizes.
     rec_in = _parallelism_floor(
         rec.select("id", "w", F.col("side").cast("long").alias("side")),
-        rec.count(),  # cached by the pivot sample above: metadata-cheap
+        rec.count(),  # reads the checkpoint, not the upstream
     )
     with_d = rec_in.mapInPandas(dists_part, dist_schema)
-    if os.environ.get("MJS_PIVOT_PROFILE"):
-        # dev-only phase split: materialize the assignment stage alone so a
-        # profiler can separate its wall from the window join's (the persist
-        # changes the plan, so never on by default)
-        import time as _time
-
-        with_d = with_d.persist()
-        _t0 = _time.time()
-        _n = with_d.count()
-        print(
-            f"[pivot-profile] assignment stage: {_time.time() - _t0:.2f}s "
-            f"({_n} rows, P={P})",
-            flush=True,
-        )
 
     # partition keys: base partition (b, b) always; window (i, j), i<j, when
     # the hyperplane rule admits a cross-boundary match with that pivot
@@ -1442,11 +1418,6 @@ def _pivot_join(
     )
 
     def join_part(pdf: pd.DataFrame) -> pd.DataFrame:
-        _prof = os.environ.get("MJS_PIVOT_PROFILE")
-        if _prof:
-            import time as _time
-
-            _t0 = _time.time()
         empty = pd.DataFrame({"rid": [], "sid": [], "emd": []}).astype(
             {"rid": "int64", "sid": "int64", "emd": "float64"}
         )
@@ -1456,8 +1427,6 @@ def _pivot_join(
         grp = int(pdf["grp"].iloc[0])
         gi, gj = divmod(grp, P)
         casc = _cascade_for(W, cfg)
-        if _prof:
-            _t_setup = _time.time() - _t0
         # candidate generation via a sorted window on centroid dim 0: the
         # Rubner contraction means a qualifying partner lies within reach on
         # every centroid dim, so pairs outside the dim-0 window never
@@ -1542,17 +1511,8 @@ def _pivot_join(
         if gi == gj:
             keep = ids[ri] > ids[li]  # unordered pairs once
             li, ri = li[keep], ri[keep]
-        if _prof:
-            _t_cand = _time.time() - _t0 - _t_setup
         if li.size == 0:
-            if _prof:
-                print(
-                    f"[join-prof] grp={grp} n={ids.size} cand=0 "
-                    f"setup={_t_setup:.3f} gen={_t_cand:.3f} casc=0.000",
-                    flush=True,
-                )
             return empty
-        _n_cand = li.size
         if stats is not None:
             from ..kernel import CascadeStats
 
@@ -1561,13 +1521,6 @@ def _pivot_join(
             stats.update(st)
         else:
             li, ri, emds = casc.run(li, ri, theta, slack=cfg.slack)
-        if _prof:
-            _t_casc = _time.time() - _t0 - _t_setup - _t_cand
-            print(
-                f"[join-prof] grp={grp} n={ids.size} cand={_n_cand} "
-                f"setup={_t_setup:.3f} gen={_t_cand:.3f} casc={_t_casc:.3f}",
-                flush=True,
-            )
         return _emit_pairs(ids, li, ri, emds)
 
     # pin the task count: same CPU-quadratic-groups-vs-byte-based-AQE
@@ -1714,17 +1667,13 @@ def emd_knn(
         sw = np.array([r[0] for r in seed_rows], dtype=np.float64)
         cfg = build_config(bin_points, seed_weights=sw, seed=seed, ground=ground)
 
-    from ..cache import release_on_gc
-
-    _holds: list[DataFrame] = []
     q = queries.select(F.col(id_col).alias("id"), F.col(w_col).alias("w"))
     if distributed is None or distributed is False:
-        # persist BEFORE the sizing probe (round 12, same class as the
-        # auto-strategy persist in emd_join_nd): the probe and the later
+        # checkpoint BEFORE the sizing probe (round 12, same class as the
+        # auto-strategy checkpoint in emd_join_nd): the probe and the later
         # consumer (collect, or the cogroup's q-side) would otherwise each
         # re-execute the query-side upstream chain
-        q = q.persist()
-        _holds.append(q)
+        q = q.localCheckpoint(eager=True)
         n_probe = q.limit(collect_threshold + 1).count()
         big = n_probe > collect_threshold
         if big and distributed is False:
@@ -1887,19 +1836,16 @@ def emd_knn(
     dbr = db.select(F.col(id_col).alias("id"), F.col(w_col).alias("w"))
     if distributed:
         # cogrouped block path: no driver materialization of either side.
-        # Persist + materialize BOTH sides first (round 12): probing .rdd
-        # on the unpersisted AQE chains executed their query stages (the
-        # documented _parallelism_floor trap, +4.0-4.6 s per probe on the
-        # sf0.1 bridge chains), and the cogroup's two branches then
-        # re-executed the chains again — four upstream executions per join.
-        # With the caches the chains run once each, and the counts they
-        # return drive the blocking.
-        lvl = q.storageLevel
-        if not (lvl.useMemory or lvl.useDisk):
-            q = q.persist()
-            _holds.append(q)
+        # Checkpoint the query side first (round 12): probing .rdd on the
+        # raw AQE chains executed their query stages (the documented
+        # _parallelism_floor trap, +4.0-4.6 s per probe on the sf0.1 bridge
+        # chains), and the cogroup's two branches then re-executed the
+        # chains again — four upstream executions per join.  Row counts,
+        # not partition probes, drive the blocking.
+        if not _materialized(q):
+            q = q.localCheckpoint(eager=True)
         nq_rows = q.count()
-        # db side: count WITHOUT caching — the array-column cache write
+        # db side: count WITHOUT checkpointing — the array-column write
         # costs more than the one chain re-execution it would save
         # (interleaved A/B: persisting both sides read 1.11x on
         # emd_knn_big), and the count replaces the old partition probe's
@@ -1977,12 +1923,11 @@ def emd_knn(
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("qid").orderBy(F.col("emd").asc(), F.col("nid").asc())
-    out = (
+    return (
         local.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("qid", "nid", "emd", "rank")
     )
-    return release_on_gc(out, *_holds) if _holds else out
 
 
 # ---------------------------------------------------------------------------
@@ -2035,12 +1980,9 @@ def emd_topk_nd(
         # build the theta-independent grid context FIRST (round 12, guide
         # §2.1): its fused count+boundaries agg supplies N for the
         # sample-size rule (the per-cell counts sum to it for free), its
-        # cached rec1 serves the seed sample without re-running the
-        # upstream chain, and cfg seeding happens inside against the cache.
-        # The old order — cfg seed collect on the raw chain, persist+count
-        # rec, sample rec, then build the ctx with its own count/boundary
-        # jobs — paid three extra upstream-chain actions for the same
-        # information.  (Sampling from the mass-filtered cache is
+        # checkpointed rec1 serves the seed sample without re-running the
+        # upstream chain, and cfg seeding happens inside against rec0.
+        # (Sampling from the mass-filtered rec1 is
         # output-safe: the ceiling is an upper bound for the kth distance
         # over rows the join actually considers, and any ceiling >= the
         # true kth yields the identical top-k.)
@@ -2059,7 +2001,7 @@ def emd_topk_nd(
             cfg = build_config(
                 bin_points, seed_weights=sw, seed=seed, ground=ground
             )
-        rec = rec.persist()
+        rec = rec.localCheckpoint(eager=True)
         sample_src = rec
 
     # driver-side seed bound for the global kth distance (QNEPreReducer.java:
@@ -2091,7 +2033,7 @@ def emd_topk_nd(
         # with the dup-tail mass; the 4096 cap bounds the driver-side
         # LB matrix (seeds^2/2 pairs) at any N.
         if rec_n is None:
-            rec_n = rec.count()  # persisted above: cheap, reused by the sample
+            rec_n = rec.count()  # checkpointed above: cheap
         sample_size = max(500, 15 * k, min(int(8.0 * rec_n**0.5), 4096))
     sample = (
         sample_src.select("id", "w")
@@ -2186,14 +2128,9 @@ def emd_topk_nd(
     else:
         # the global top-k is k rows by definition — merge on the driver
         rows = scored.orderBy("emd", "rid", "sid").limit(k).collect()
-    # release every cache deterministically and return a local DataFrame so
-    # no cached RDDs outlive the call
-    spark = hist.sparkSession
-    if ctx is not None:
-        ctx.rec1.unpersist()
-    if rec.is_cached:
-        rec.unpersist()
-    out = spark.createDataFrame(
+    # a local DataFrame: no plan outlives the call that references its
+    # checkpoints, so the ContextCleaner can free them
+    out = hist.sparkSession.createDataFrame(
         [(i + 1, r.rid, r.sid, float(r.emd)) for i, r in enumerate(rows)],
         "rank long, rid long, sid long, emd double",
     )

@@ -150,17 +150,14 @@ def unigram_lm(
         _spread(df).select(F.explode(toks).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
+        .localCheckpoint(eager=True)
     )
-    cnt = cnt.persist()
-    try:
-        total = cnt.agg(F.coalesce(F.sum("c"), F.lit(0))).collect()[0][0]
-        top = (
-            cnt.orderBy(F.col("c").desc(), F.col("w").asc())
-            .limit(int(vocab_size))
-            .collect()
-        )
-    finally:
-        cnt.unpersist()
+    total = cnt.agg(F.coalesce(F.sum("c"), F.lit(0))).collect()[0][0]
+    top = (
+        cnt.orderBy(F.col("c").desc(), F.col("w").asc())
+        .limit(int(vocab_size))
+        .collect()
+    )
     return _lp_from_counts(top, total, vocab_size)
 
 
@@ -615,37 +612,34 @@ def bigram_lm(
         .select(F.col("e.k").alias("k"), F.col("e.w").alias("w"))
         .groupBy("k", "w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
+        .localCheckpoint(eager=True)
     )
-    try:
-        uni = cnt.where(F.col("k") == 0)
-        total = uni.agg(F.coalesce(F.sum("c"), F.lit(0))).collect()[0][0]
-        top = (
-            uni.orderBy(F.col("c").desc(), F.col("w").asc())
-            .limit(int(vocab_size))
-            .collect()
-        )
-        uni_lp, oov_lp = _lp_from_counts(top, total, vocab_size)
+    uni = cnt.where(F.col("k") == 0)
+    total = uni.agg(F.coalesce(F.sum("c"), F.lit(0))).collect()[0][0]
+    top = (
+        uni.orderBy(F.col("c").desc(), F.col("w").asc())
+        .limit(int(vocab_size))
+        .collect()
+    )
+    uni_lp, oov_lp = _lp_from_counts(top, total, vocab_size)
 
-        pair_cnt = (
-            cnt.where(F.col("k") == 1)
-            .select(F.col("w").alias("g"), "c")
-            .orderBy(F.col("c").desc(), F.col("g").asc())
-            .limit(int(bigram_size))
-            .collect()
-        )
-        heads = {r["g"].split(" ", 1)[0] for r in pair_cnt}
-        if heads:
-            tok_cnt = {
-                r["w"]: r["c"]
-                for r in uni.where(
-                    F.col("w").isin(*sorted(heads))
-                ).collect()
-            }
-        else:
-            tok_cnt = {}
-    finally:
-        cnt.unpersist()
+    pair_cnt = (
+        cnt.where(F.col("k") == 1)
+        .select(F.col("w").alias("g"), "c")
+        .orderBy(F.col("c").desc(), F.col("g").asc())
+        .limit(int(bigram_size))
+        .collect()
+    )
+    heads = {r["g"].split(" ", 1)[0] for r in pair_cnt}
+    if heads:
+        tok_cnt = {
+            r["w"]: r["c"]
+            for r in uni.where(
+                F.col("w").isin(*sorted(heads))
+            ).collect()
+        }
+    else:
+        tok_cnt = {}
     bi_lp = [
         (
             r["g"],

@@ -1,105 +1,56 @@
-"""Regression tests for the round-10 "second execution costs 3x" defect.
-
-Root cause (round 11): ``DataFrame.unpersist()`` uncaches by analyzed-plan
-``sameResult``, so ``cache.drain()`` of a DEAD query's persist handle
-evicted a LIVE, identically-planned cache registered by a later query —
-``dedup_clusters`` (which runs jaccard_pairs internally) followed by
-``dedup_jaccard_ngram`` recomputed the tokenize+freq+groupBy chain three
-times (21.6 s vs 6.9 s at sf0.1).  ``drain`` now skips unpersisting any
-marked handle whose plan matches a live entry's (including the caches the
-in-flight ``release_on_gc`` call is registering).
+"""Intermediate lifetime: operators hold shared intermediates as eager
+local checkpoints.  Each checkpoint owns its own RDD blocks, so dropping
+one can never evict an identically-planned twin, and running the same
+query twice in one session costs about the same both times.
 """
 
 from __future__ import annotations
 
-import gc
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from melody_join_spark import cache
+from storage import checkpoint_rdd_id, stored_rdds, wait_released
 
 SF = "/root/testdata/sf0.001"
 
 
-def _tiny(spark):
-    """A deterministic small DF whose plan is identical across calls."""
-    return (
-        spark.range(0, 1000)
-        .select(F.col("id"), (F.col("id") % 7).alias("k"))
-        .groupBy("k")
-        .agg(F.count("*").alias("n"))
-    )
+def test_twin_checkpoints_are_independent(spark):
+    """Two checkpoints of one plan; dropping one and letting the cleaner
+    free it leaves the other serving its rows without recomputing them."""
+    acc = spark.sparkContext.accumulator(0)
 
+    @F.udf("long")
+    def bump(x):
+        acc.add(1)
+        return x % 7
 
-def test_drain_protects_live_plan_twin(spark):
-    """Draining a dead handle must NOT evict a live, identically-planned
-    cache registered by a later query (Spark uncaches by plan equality)."""
-    cache.drain(force=True)
-    c0 = _tiny(spark).persist()
-    r0 = c0.select(F.sum("n").alias("s"))
-    cache.release_on_gc(r0, c0)
-    r0.count()
-    del r0, c0
-    gc.collect()  # entry 0 marked releasable, drained at next registration
+    def plan():
+        return (
+            spark.range(0, 1000, numPartitions=4)
+            .select(bump("id").alias("k"))
+            .groupBy("k")
+            .agg(F.count("*").alias("n"))
+        )
 
-    c1 = _tiny(spark).persist()  # SAME analyzed plan as c0
-    r1 = c1.select(F.sum("n").alias("s"))
-    # this drain unpersists the dead c0 handle; before the fix the
-    # plan-matching uncache also killed c1's registration
-    cache.release_on_gc(r1, c1)
-    r1.count()
-    assert c1.storageLevel.useMemory, (
-        "live twin's cache was evicted by draining the dead handle"
-    )
-    del r1, c1
-    gc.collect()
-    cache.drain()
+    baseline = set(stored_rdds(spark))
+    keep = plan().localCheckpoint(eager=True)
+    drop = plan().localCheckpoint(eager=True)
+    assert acc.value == 2000
+    keep_id, drop_id = checkpoint_rdd_id(keep), checkpoint_rdd_id(drop)
+    assert keep_id != drop_id
 
+    del drop
+    left = wait_released(spark, baseline | {keep_id})
+    assert not left, f"dropped twin's blocks never freed: {left}"
 
-def test_drain_skips_foreign_recached_twin(spark):
-    """Round-12 defect: a dead handle drained DURING a newer same-planned
-    query's construction (after its persist+materialize, before its own
-    release_on_gc) must not evict the new cache.  The live-twin guard can't
-    see it — it is in the CacheManager but not yet registered here — so the
-    ownership token has to catch it."""
-    cache.drain(force=True)
-    c0 = _tiny(spark).persist()
-    r0 = c0.select(F.sum("n").alias("s"))
-    cache.release_on_gc(r0, c0)
-    r0.count()
-    spark.catalog.clearCache()  # what bench.py does between queries
-    del r0, c0
-    gc.collect()  # entry 0 marked releasable
-
-    # the "newer query": persist + materialize the SAME plan, but do NOT
-    # register it yet (its release_on_gc would come at construction end)
-    c1 = _tiny(spark).persist()
-    c1.count()
-    # an inner operator's registration fires the drain of the dead entry;
-    # c1 is in neither _entries nor protect
-    other = spark.range(0, 5).persist()
-    cache.release_on_gc(other.select(F.sum("id").alias("s")), other)
-    assert c1.storageLevel.useMemory, (
-        "dead handle's drain evicted the newer query's re-registered cache"
-    )
-    del c1, other
-    gc.collect()
-    cache.drain(force=True)
-
-
-def test_drain_force_still_releases_everything(spark):
-    """release_caches/force bypasses the twin protection: everything goes."""
-    cache.drain(force=True)
-    c0 = _tiny(spark).persist()
-    r0 = c0.select(F.sum("n").alias("s"))
-    cache.release_on_gc(r0, c0)
-    r0.count()
-    assert c0.storageLevel.useMemory
-    cache.drain(force=True)
-    assert not c0.storageLevel.useMemory
-    assert len(cache._entries) == 0
+    stored = stored_rdds(spark)
+    assert keep_id in stored, "dropping one twin evicted the other"
+    assert stored[keep_id] == keep.rdd.getNumPartitions()
+    rows = sorted((r.k, r.n) for r in keep.collect())
+    assert rows == [(k, len(range(k, 1000, 7))) for k in range(7)]
+    assert acc.value == 2000, "the surviving twin recomputed its plan"
 
 
 def _host_steal_pct(seconds: float = 1.0) -> float:
@@ -116,42 +67,41 @@ def _host_steal_pct(seconds: float = 1.0) -> float:
 
 
 def test_jaccard_second_execution_cache_survives(spark):
-    """The exact defect sequence: jaccard chain executed twice in one
-    session, the first result dead before the second constructs.  The
-    second run's internal docs cache must survive its own construction
+    """The jaccard chain executed twice in one session, the first result
+    dropped (and its blocks freed) before the second is built.  The second
+    run's docs checkpoint must still be stored after its own execution
     (deterministic assert), and its wall must be in the first run's band
     (timing assert, generous slack, skipped on contended hosts)."""
     from melody_join_spark.operators.dedup import jaccard_pairs
 
-    cache.drain(force=True)
     docs = spark.read.parquet(f"{SF}/documents.parquet")
+    baseline = set(stored_rdds(spark))
 
     t0 = time.time()
     r1 = jaccard_pairs(docs, threshold=0.6, ngram=4)
     n1 = r1.count()
     wall1 = time.time() - t0
-    spark.catalog.clearCache()  # what bench.py does between queries
     del r1
-    gc.collect()
+    # what bench.py does between queries: the dropped result's blocks go
+    assert not wait_released(spark, baseline)
 
+    before = set(stored_rdds(spark))
     t0 = time.time()
     r2 = jaccard_pairs(docs, threshold=0.6, ngram=4)
-    # deterministic core assert: the fresh docs persist survived the drain
-    # that ran inside release_on_gc during construction
-    jcm = spark._jsparkSession.sharedState().cacheManager()
-    assert not jcm.isEmpty(), (
-        "second execution's internal cache was evicted at construction time"
-    )
+    built = stored_rdds(spark)
+    held = set(built) - before
+    assert held, "second execution holds no checkpoint"
     n2 = r2.count()
     wall2 = time.time() - t0
     assert n2 == n1
+    after = stored_rdds(spark)
+    assert all(after.get(i) == built[i] for i in held), (
+        "second execution's checkpoint lost blocks while it ran"
+    )
     del r2
-    gc.collect()
-    cache.drain()
 
     if _host_steal_pct() > 1.0:
         pytest.skip("contended host: timing ratio not meaningful")
-    # before the fix run 2 recomputed the docs chain 3x (the prefix explode
-    # and both verify sides); 2.5x slack absorbs same-host noise while still
-    # catching the defect's 3x signature
+    # a second run that recomputed the docs chain per consumer measured 3x;
+    # 2.5x slack absorbs same-host noise while still catching it
     assert wall2 <= max(2.5 * wall1, wall1 + 2.0), (wall1, wall2)

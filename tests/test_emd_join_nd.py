@@ -286,46 +286,30 @@ def test_cell_level_guest_pruning_active(spark, hist_df, bins_2d):
 
 
 def test_join_releases_caches_on_gc(spark, hist_df, bins_2d):
-    """Library contract (two-phase): dropping the result marks the
-    operator's internal persist() handles releasable; the next operator
-    invocation (or an explicit drain) actually unpersists them — so caches
-    never die mid-query, and never accumulate across queries."""
-    import gc
+    """Library contract: the operator's checkpoints live while the result
+    is referenced and are freed by Spark's ContextCleaner once it is
+    dropped (Python GC + JVM GC) — the engine itself releases nothing."""
+    from storage import stored_rdds, wait_released
 
-    from melody_join_spark import cache
-
-    cache.drain(force=True)
-    jsc = spark.sparkContext._jsc
-    base = jsc.getPersistentRDDs().size()  # caches owned by other fixtures
+    baseline = set(stored_rdds(spark))
     res = emd_join_nd(hist_df, bins_2d, THETA, strategy="grid", grid=3)
     res.count()
-    assert jsc.getPersistentRDDs().size() > base  # cache alive while result is
+    assert set(stored_rdds(spark)) - baseline  # held while the result is
     del res
-    gc.collect()
-    # a second query's construction drains the first query's caches ...
-    res2 = emd_join_nd(hist_df, bins_2d, THETA, strategy="grid", grid=4)
-    res2.count()
-    del res2
-    gc.collect()
-    # ... and the explicit drain releases everything the operators added
-    cache.drain()
-    assert jsc.getPersistentRDDs().size() == base
+    left = wait_released(spark, baseline)
+    assert not left, f"checkpoints outlived the dropped result: {left}"
 
 
 def test_topk_releases_caches_deterministically(spark, hist_df, bins_2d):
-    import gc
+    """emd_topk_nd returns a local DataFrame, so nothing it checkpointed
+    is referenced after the call: every block it stored is freed."""
+    from storage import stored_rdds, wait_released
 
-    from melody_join_spark import cache
-
-    cache.drain(force=True)
-    jsc = spark.sparkContext._jsc
-    base = jsc.getPersistentRDDs().size()  # caches owned by other fixtures
+    baseline = set(stored_rdds(spark))
     res = emd_topk_nd(hist_df, bins_2d, 5, strategy="grid", grid=3)
     assert res.count() == 5
-    del res
-    gc.collect()
-    cache.drain()
-    assert jsc.getPersistentRDDs().size() == base
+    left = wait_released(spark, baseline)
+    assert not left, f"top-k checkpoints outlived the call: {left}"
 
 
 def test_topk_single_join_pass(spark, hist_df, bins_2d, monkeypatch):
@@ -532,7 +516,7 @@ def test_parallelism_floor_widens_without_reexecuting_upstream(
     the session shuffle parallelism so per-record Python kernels never run
     single-task on a small-but-dense table (one 12 MB parquet split held a
     measured 456 s task at sf1 before the floor), and (b) probe the
-    partition count on the MATERIALIZED centroid cache, never on the raw
+    partition count on the MATERIALIZED centroid checkpoint, never on the raw
     plan — rdd.getNumPartitions() on an un-executed AQE plan runs the whole
     upstream chain an extra time.  Guarded here with a counting pandas UDF
     upstream of a coalesce(1): every upstream row evaluation increments an
@@ -556,7 +540,7 @@ def test_parallelism_floor_widens_without_reexecuting_upstream(
     # subtree), unlike a column UDF which Catalyst may inline into several
     # expressions of the same pass.  The repartition puts an AQE exchange
     # ABOVE the counter, mimicking the bench bridge chain: probing
-    # rdd.getNumPartitions() on such a plan (instead of on the cache)
+    # rdd.getNumPartitions() on such a plan (instead of on the checkpoint)
     # executes its shuffle-map stages — i.e. re-runs the counter — which
     # is exactly the regression this test pins.
     narrow = (
@@ -584,7 +568,6 @@ def test_parallelism_floor_widens_without_reexecuting_upstream(
         f"upstream evaluated {acc.value} rows for {n} inputs — the floor "
         "probe re-executed the input plan"
     )
-    ctx.rec1.unpersist()
 
 
 def test_parallelism_floor_row_aware(spark, hist_df):
@@ -620,23 +603,19 @@ def test_parallelism_floor_row_aware(spark, hist_df):
 def test_parallelism_floor_rejects_unpersisted_input(spark, hist_df):
     """Misuse guard (round-5 VERDICT next #7): _parallelism_floor's
     partition probe executes the upstream plan when the relation is not
-    cache-backed, so a raw chain must be REFUSED loudly — a future call
-    site cannot silently pay an extra chain execution.  Directly-persisted
-    frames AND narrow projections of persisted frames (whose own
-    storageLevel reads NONE but whose probe hits the InMemoryRelation)
-    must both pass."""
-    from melody_join_spark import cache
+    materialized, so a raw chain must be REFUSED loudly — a future call
+    site cannot silently pay an extra chain execution.  Checkpoints,
+    persisted frames AND narrow projections of either (whose own
+    storageLevel reads NONE) must all pass."""
     from melody_join_spark.operators.emd_join_nd import _parallelism_floor
 
-    # earlier operators in the module (e.g. the distributed kNN) may hold
-    # two-phase-released caches whose plan sameResults this projection —
-    # the raw chain would then legitimately be cache-backed and the guard
-    # (correctly) would not fire; re-establish the test's premise first
-    cache.release_caches(spark)
-
-    raw = hist_df.selectExpr("id", "w")  # un-persisted chain
+    raw = hist_df.selectExpr("id", "w")  # un-materialized chain
     with pytest.raises(ValueError, match="persist"):
         _parallelism_floor(raw)
+
+    checkpointed = hist_df.localCheckpoint(eager=True)
+    assert _parallelism_floor(checkpointed) is not None
+    assert _parallelism_floor(checkpointed.select("id", "w")) is not None
 
     cached = hist_df.persist()
     try:
